@@ -20,13 +20,10 @@ repartitioning on a salt of the media id.
 from __future__ import annotations
 
 import hashlib
-import os
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -38,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mapreducego_spark.operators.util import sort_once
+from mapreducego_spark.operators.util import map_rows, sort_once, stage_files
 
 # Import-time probe: the real decoder activates automatically when an
 # image library is present; everywhere else the deterministic stub
@@ -116,6 +113,37 @@ def media_from_binary_files(files: DataFrame) -> DataFrame:
         ).alias("mime"),
         F.col("length").cast("long").alias("n_bytes"),
     )
+
+
+def scan_media(spark: SparkSession, path: str, ext: str) -> DataFrame:
+    """Distributed binaryFile scan of the staged ``media_<id>.<ext>``
+    files in ``path`` as (media_id, payload) — the decode tier's one
+    input shape. Directory load + pathGlobFilter, never a glob in the
+    path: the glob form forces a driver-side expansion listing
+    measured ~20x slower on large staged dirs (NOTES_r14)."""
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"media_*.{ext}")
+        .load(path)
+        .select(
+            F.regexp_extract(F.col("path"), rf"media_(\d+)\.{ext}", 1)
+            .cast("long")
+            .alias("media_id"),
+            F.col("content").alias("payload"),
+        )
+    )
+
+
+PIXEL_SCHEMA = (
+    "media_id long, width int, height int, px_sum long, feature_hash string"
+)
+
+
+def pixel_row(w: int, h: int, rgb: bytes) -> tuple[int, int, int, str]:
+    """The decoded-raster tail of a PIXEL_SCHEMA row: dimensions, the
+    integer sum of every byte, and md5 of the HEX string (both
+    oracle-reconstructable; DuckDB has no md5 over BLOB)."""
+    return w, h, int(sum(rgb)), hashlib.md5(rgb.hex().encode()).hexdigest()
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -677,21 +705,13 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     payloads -> typed feature rows. This is the 'decode / feature-
     extract' slot; resize / frame-sample plug into the same shape."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            feats = [decode_image(p, fake=fake) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "mime": batch["mime"],
-                    "n_bytes": batch["n_bytes"],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "feature_hash": [f[2] for f in feats],
-                }
-            )
+    def extract(mid, p, mime, n_bytes):
+        yield (mid, mime, n_bytes, *decode_image(p, fake=fake))
 
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(
+        media.select("media_id", "payload", "mime", "n_bytes"),
+        extract, FEATURE_SCHEMA,
+    )
 
 
 def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
@@ -727,25 +747,26 @@ def _png_fixture_pixels(i: int, width: int, height: int) -> bytes:
     return (d * (npx // 16 + 1))[:npx]
 
 
+def _stage_media(sf_dir: str, name: str, n: int, ext: str, encode) -> str:
+    """stage_files for ``n`` numbered fixtures ``media_<i>.<ext>``
+    whose bytes are ``encode(i)`` — pure functions of the index."""
+    return stage_files(
+        sf_dir, name, ((f"media_{i:05d}.{ext}", encode(i)) for i in range(n))
+    )
+
+
 def stage_png_media(sf_dir: str, n: int = 240) -> str:
     """Write ``n`` REAL deterministic PNG files to a staging
     directory (test/fixture plumbing, driver-side by design — in
     production media arrives as files; this stages them). Idempotent:
     the bytes are pure functions of the index, so re-staging
     overwrites with identical content."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_png{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            w, h = _png_fixture_dims(i)
-            png = encode_png_rgb(w, h, _png_fixture_pixels(i, w, h))
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(png)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+
+    def encode(i: int) -> bytes:
+        w, h = _png_fixture_dims(i)
+        return encode_png_rgb(w, h, _png_fixture_pixels(i, w, h))
+
+    return _stage_media(sf_dir, f"png{n}", n, "png", encode)
 
 
 def multimodal_decode(
@@ -764,45 +785,12 @@ def multimodal_decode(
     Scale shape: files scanned distributed (binaryFile), payloads
     cross into Python once per Arrow batch, decode parallelizes per
     file; metadata-only consumers would prune before this UDF."""
-    path = stage_png_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_png_media(sf_dir, n), "png")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_png(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_png(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 JPEG_SOI = b"\xff\xd8"
@@ -1147,23 +1135,16 @@ def stage_jpeg_media(sf_dir: str, n: int = 240) -> str:
     driver-side staging contract as stage_png_media). Entropy filler
     is md5(str(i)) tiled to i % 777 + 64 bytes, byte-stuffed by the
     encoder."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            d = hashlib.md5(str(i).encode()).digest()
-            n_fill = i % 777 + 64
-            entropy = (d * (n_fill // 16 + 1))[:n_fill]
-            jpg = encode_jpeg_headers(
-                entropy=entropy, **_jpeg_fixture_params(i)
-            )
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(jpg)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+
+    def encode(i: int) -> bytes:
+        d = hashlib.md5(str(i).encode()).digest()
+        n_fill = i % 777 + 64
+        entropy = (d * (n_fill // 16 + 1))[:n_fill]
+        return encode_jpeg_headers(
+            entropy=entropy, **_jpeg_fixture_params(i)
+        )
+
+    return _stage_media(sf_dir, f"jpeg{n}", n, "jpg", encode)
 
 
 def multimodal_jpeg_meta(
@@ -1184,43 +1165,18 @@ def multimodal_jpeg_meta(
     Python once per Arrow batch, the parser touches only header
     bytes (stops at SOS); metadata-only consumers prune before any
     pixel work exists at all."""
-    path = stage_jpeg_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_jpeg_media(sf_dir, n), "jpg")
+
+    def parse(mid, p):
+        m = jpeg_meta(bytes(p))
+        yield (
+            int(mid), m["width"], m["height"], m["components"],
+            m["precision"], bool(m["progressive"]), m["density_unit"],
+            m["x_density"], m["y_density"],
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = jpeg_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["width"], m["height"],
-                        m["components"], m["precision"],
-                        bool(m["progressive"]), m["density_unit"],
-                        m["x_density"], m["y_density"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "components",
-                    "precision", "progressive", "density_unit",
-                    "x_density", "y_density",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, width int, height int, components int, "
         "precision int, progressive boolean, density_unit int, "
         "x_density int, y_density int",
@@ -1274,17 +1230,9 @@ def encode_jpeg_pixels_fixture(i: int) -> bytes:
 def stage_jpeg_pixels(sf_dir: str, n: int = 240) -> str:
     """Write ``n`` real entropy-coded baseline JPEGs (same staging
     contract as stage_png_media / stage_jpeg_media; idempotent)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegpx{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpegpx{n}", n, "jpg", encode_jpeg_pixels_fixture
+    )
 
 
 def multimodal_jpeg_decode(
@@ -1308,45 +1256,12 @@ def multimodal_jpeg_decode(
     metadata consumers use the scan-free jpeg_meta tier instead."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_jpeg_baseline(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def multimodal_resize_box(
@@ -1372,57 +1287,19 @@ def multimodal_resize_box(
     perceptual dedup and preview sinks."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                a = (
-                    np.frombuffer(rgb, dtype=np.uint8)
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                h2, w2 = h // 2, w // 2
-                a = a[: h2 * 2, : w2 * 2]
-                ds = (
-                    a[0::2, 0::2] + a[1::2, 0::2]
-                    + a[0::2, 1::2] + a[1::2, 1::2]
-                ) // 4
-                db = ds.astype(np.uint8).tobytes()
-                rows.append(
-                    (
-                        int(mid),
-                        w2,
-                        h2,
-                        int(ds.sum()),
-                        hashlib.md5(db.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def resize(mid, p):
+        w, h, rgb = decode_jpeg_baseline(bytes(p))
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        h2, w2 = h // 2, w // 2
+        a = a[: h2 * 2, : w2 * 2].astype(np.int64)
+        ds = (
+            a[0::2, 0::2] + a[1::2, 0::2] + a[0::2, 1::2] + a[1::2, 1::2]
+        ) // 4
+        yield (int(mid), *pixel_row(w2, h2, ds.astype(np.uint8).tobytes()))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long,"
-        " feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, resize, PIXEL_SCHEMA), "media_id")
 
 
 def _jpeg_px_fixture_planes_420(i: int):
@@ -1471,17 +1348,9 @@ def encode_jpeg_pixels_fixture_420(i: int) -> bytes:
 def stage_jpeg_pixels_420(sf_dir: str, n: int = 240) -> str:
     """Stage ``n`` real 4:2:0 entropy-coded JPEGs (same idempotent
     staging contract as stage_jpeg_pixels)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg420_{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_420(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpeg420_{n}", n, "jpg", encode_jpeg_pixels_fixture_420
+    )
 
 
 def multimodal_jpeg_decode_420(
@@ -1508,45 +1377,12 @@ def multimodal_jpeg_decode_420(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels_420(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels_420(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_jpeg_baseline(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def _jpeg_px_fixture_planes_rst(i: int):
@@ -1590,17 +1426,9 @@ def encode_jpeg_pixels_fixture_rst(i: int) -> bytes:
 
 
 def stage_jpeg_pixels_rst(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegrst{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_rst(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpegrst{n}", n, "jpg", encode_jpeg_pixels_fixture_rst
+    )
 
 
 def multimodal_jpeg_decode_rst(
@@ -1620,45 +1448,12 @@ def multimodal_jpeg_decode_rst(
     crossing per batch, no shuffle before the presentation sort."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels_rst(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels_rst(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_jpeg_baseline(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def _jpeg_px_fixture_planes_prog(i: int):
@@ -1712,17 +1507,9 @@ def encode_jpeg_pixels_fixture_prog(i: int) -> bytes:
 
 
 def stage_jpeg_pixels_prog(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegprog{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_prog(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpegprog{n}", n, "jpg", encode_jpeg_pixels_fixture_prog
+    )
 
 
 def multimodal_jpeg_decode_progressive(
@@ -1751,45 +1538,12 @@ def multimodal_jpeg_decode_progressive(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_jpeg_pixels_prog(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels_prog(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_jpeg(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def _jpeg_px_fixture_planes_422(i: int):
@@ -1835,17 +1589,9 @@ def encode_jpeg_pixels_fixture_422(i: int) -> bytes:
 
 
 def stage_jpeg_pixels_422(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg422_{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_422(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpeg422_{n}", n, "jpg", encode_jpeg_pixels_fixture_422
+    )
 
 
 def multimodal_jpeg_decode_422(
@@ -1868,45 +1614,12 @@ def multimodal_jpeg_decode_422(
     crossing per batch, no shuffle before the presentation sort."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels_422(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_pixels_422(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_jpeg_baseline(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def _png_variants_fixture(i: int):
@@ -1957,17 +1670,9 @@ def encode_png_variant_fixture(i: int) -> bytes:
 
 
 def stage_png_variants(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pngvar{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(encode_png_variant_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"pngvar{n}", n, "png", encode_png_variant_fixture
+    )
 
 
 def multimodal_png_variants(
@@ -1989,45 +1694,12 @@ def multimodal_png_variants(
     Scale shape: identical to multimodal_decode — distributed scan,
     one Arrow crossing per batch, no shuffle before the presentation
     sort."""
-    path = stage_png_variants(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_png_variants(sf_dir, n), "png")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_png(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        yield (int(mid), *pixel_row(*decode_png(bytes(p))))
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+    return sort_once(map_rows(media, decode, PIXEL_SCHEMA), "media_id")
 
 
 def _png_depth_fixture(i: int):
@@ -2110,17 +1782,23 @@ def encode_png_depth_fixture(i: int) -> bytes:
 
 
 def stage_png_depth(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pngdepth{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(encode_png_depth_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"pngdepth{n}", n, "png", encode_png_depth_fixture
+    )
+
+
+def _decode_rgba(mid, p):
+    """map_rows body shared by the PNG alpha tiers: RGB and alpha
+    sums plus md5 over the interleaved RGBA raster's HEX string."""
+    w, h, rgb, alpha = decode_png_rgba(bytes(p))
+    rgba = bytearray()
+    for k in range(w * h):
+        rgba += rgb[3 * k : 3 * k + 3]
+        rgba.append(alpha[k])
+    yield (
+        int(mid), w, h, int(sum(rgb)), int(sum(alpha)),
+        hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
+    )
 
 
 def multimodal_png_depth(
@@ -2142,48 +1820,10 @@ def multimodal_png_depth(
 
     Scale shape: identical to multimodal_decode — distributed scan,
     one Arrow crossing, no shuffle before the presentation sort."""
-    path = stage_png_depth(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_png_depth(sf_dir, n), "png")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb, alpha = decode_png_rgba(bytes(p))
-                rgba = bytearray()
-                for k in range(w * h):
-                    rgba += rgb[3 * k : 3 * k + 3]
-                    rgba.append(alpha[k])
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        int(sum(alpha)),
-                        hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "a_sum",
-                    "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, _decode_rgba,
         "media_id long, width int, height int, px_sum long, a_sum long,"
         " feature_hash string",
     ), "media_id")
@@ -2207,26 +1847,18 @@ def _exif_fixture_params(i: int) -> dict:
 
 
 def stage_jpeg_exif(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegexif{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _exif_fixture_params(i)
-            jpg = encode_jpeg_headers(
-                i % 31 + 8,
-                i % 23 + 8,
-                app1=build_exif(
-                    p["byte_order"], p["orientation"], p["make"],
-                    p["model"], p["datetime"], p["datetime_original"],
-                ),
-            )
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(jpg)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        p = _exif_fixture_params(i)
+        return encode_jpeg_headers(
+            i % 31 + 8,
+            i % 23 + 8,
+            app1=build_exif(
+                p["byte_order"], p["orientation"], p["make"],
+                p["model"], p["datetime"], p["datetime_original"],
+            ),
+        )
+
+    return _stage_media(sf_dir, f"jpegexif{n}", n, "jpg", encode)
 
 
 def multimodal_jpeg_exif(
@@ -2246,45 +1878,17 @@ def multimodal_jpeg_exif(
 
     Scale shape: header-only parse (no entropy decode), distributed
     scan, no shuffle before the presentation sort."""
-    path = stage_jpeg_exif(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_jpeg_exif(sf_dir, n), "jpg")
+
+    def parse(mid, p):
+        x = jpeg_exif(bytes(p))
+        yield (
+            int(mid), x["byte_order"], x["orientation"], x["make"],
+            x["model"], x["datetime"], x["datetime_original"],
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                x = jpeg_exif(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        x["byte_order"],
-                        x["orientation"],
-                        x["make"],
-                        x["model"],
-                        x["datetime"],
-                        x["datetime_original"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_order", "orientation", "make",
-                    "model", "dt", "dt_original",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, byte_order string, orientation long, make string,"
         " model string, dt string, dt_original string",
     ), "media_id")
@@ -2332,17 +1936,9 @@ def encode_jpeg_oriented_fixture(i: int) -> bytes:
 
 
 def stage_jpeg_oriented(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegor{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_oriented_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"jpegor{n}", n, "jpg", encode_jpeg_oriented_fixture
+    )
 
 
 def multimodal_decode_oriented(
@@ -2371,49 +1967,19 @@ def multimodal_decode_oriented(
     permutation, not a copy-heavy Python loop."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_jpeg_oriented(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_jpeg_oriented(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                blob = bytes(p)
-                w, h, rgb = decode_jpeg(blob)
-                o = jpeg_exif(blob)["orientation"]
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                u = apply_exif_orientation(a, o)
-                ub = np.ascontiguousarray(u).tobytes()
-                rows.append(
-                    (
-                        int(mid),
-                        o,
-                        u.shape[1],
-                        u.shape[0],
-                        int(np.sum(u, dtype=np.int64)),
-                        hashlib.md5(ub.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "orientation", "width", "height",
-                    "px_sum", "feature_hash",
-                ],
-            )
+    def decode(mid, p):
+        blob = bytes(p)
+        w, h, rgb = decode_jpeg(blob)
+        o = jpeg_exif(blob)["orientation"]
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        u = apply_exif_orientation(a, o)
+        ub = np.ascontiguousarray(u).tobytes()
+        yield (int(mid), o, *pixel_row(u.shape[1], u.shape[0], ub))
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, orientation long, width int, height int,"
         " px_sum long, feature_hash string",
     ), "media_id")
@@ -2480,32 +2046,7 @@ def stage_wav_media(sf_dir: str, n: int = 240) -> str:
     # dir name versioned (wavB): fixture bytes changed in r13 (odd
     # LIST payload) and the _STAGED marker makes staging idempotent,
     # so the old dir must not satisfy the new content
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wavB{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.wav"), "wb") as fh:
-                fh.write(encode_wav_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def _wav_media_df(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    path = stage_wav_media(sf_dir, n)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.wav")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.wav", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    return _stage_media(sf_dir, f"wavB{n}", n, "wav", encode_wav_fixture)
 
 
 def multimodal_audio_meta(
@@ -2528,33 +2069,17 @@ def multimodal_audio_meta(
     queues before anyone touches samples."""
     from mapreducego_spark.functions.wavcodec import parse_wav_meta
 
-    media = _wav_media_df(spark, sf_dir, n)
+    media = scan_media(spark, stage_wav_media(sf_dir, n), "wav")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_wav_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        m["sample_rate"],
-                        m["channels"],
-                        m["bits"],
-                        m["n_frames"],
-                        m["duration_us"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "channels", "bits",
-                    "n_frames", "duration_us",
-                ],
-            )
+    def parse(mid, p):
+        m = parse_wav_meta(bytes(p))
+        yield (
+            int(mid), m["sample_rate"], m["channels"], m["bits"],
+            m["n_frames"], m["duration_us"],
+        )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, sample_rate long, channels long, bits long,"
         " n_frames long, duration_us long",
     ), "media_id")
@@ -2580,38 +2105,20 @@ def multimodal_audio_stats(
     sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
+    media = scan_media(spark, stage_wav_media(sf_dir, n), "wav")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        nf * ch,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int(np.abs(a).sum()),
-                        int((a * a).sum()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "s_sum", "s_min", "s_max",
-                    "abs_sum", "sq_sum", "w_sum",
-                ],
-            )
+    def stats(mid, p):
+        meta, s = decode_wav(bytes(p))
+        a = s.astype(np.int64)
+        nf, ch = a.shape
+        w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
+        yield (
+            int(mid), nf * ch, int(a.sum()), int(a.min()), int(a.max()),
+            int(np.abs(a).sum()), int((a * a).sum()), int((w * a).sum()),
+        )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, stats,
         "media_id long, n_samples long, s_sum long, s_min long,"
         " s_max long, abs_sum long, sq_sum long, w_sum long",
     ), "media_id")
@@ -2646,31 +2153,21 @@ def multimodal_audio_loudest_window(
     after ingest."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
+    media = scan_media(spark, stage_wav_media(sf_dir, n), "wav")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                win_len = meta["sample_rate"] // 100
-                for w0 in range(0, meta["n_frames"], win_len):
-                    chunk = a[w0 : w0 + win_len]
-                    rows.append(
-                        (
-                            int(mid),
-                            w0 // win_len,
-                            int((chunk * chunk).sum()),
-                            int(np.abs(chunk).max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "win_idx", "energy", "peak"]
+    def windows(mid, p):
+        meta, s = decode_wav(bytes(p))
+        a = s.astype(np.int64)
+        win_len = meta["sample_rate"] // 100
+        for w0 in range(0, meta["n_frames"], win_len):
+            chunk = a[w0 : w0 + win_len]
+            yield (
+                int(mid), w0 // win_len, int((chunk * chunk).sum()),
+                int(np.abs(chunk).max()),
             )
 
-    wins = media.mapInPandas(
-        run, "media_id long, win_idx long, energy long, peak long"
+    wins = map_rows(
+        media, windows, "media_id long, win_idx long, energy long, peak long"
     )
     return loudest_window_agg(wins).orderBy("media_id")
 
@@ -2754,17 +2251,7 @@ def encode_avi_fixture(i: int) -> bytes:
 
 
 def stage_avi_media(sf_dir: str, n: int = 120) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_avi{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.avi"), "wb") as fh:
-                fh.write(encode_avi_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(sf_dir, f"avi{n}", n, "avi", encode_avi_fixture)
 
 
 def multimodal_video_frames(
@@ -2804,49 +2291,18 @@ def _video_frame_rows(
     from mapreducego_spark.functions.avicodec import parse_avi
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_avi_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.avi")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.avi", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_avi_media(sf_dir, n), "avi")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = parse_avi(bytes(p))
-                for f, blob in enumerate(frames):
-                    w, h, rgb = decode_jpeg(blob)
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            meta["n_frames"],
-                            meta["us_per_frame"],
-                            f * meta["us_per_frame"],
-                            w,
-                            h,
-                            int(sum(rgb)),
-                            hashlib.md5(rgb.hex().encode()).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "us_per_frame",
-                    "ts_us", "width", "height", "px_sum", "feature_hash",
-                ],
+    def frames(mid, p):
+        meta, blobs = parse_avi(bytes(p))
+        for f, blob in enumerate(blobs):
+            yield (
+                int(mid), f, meta["n_frames"], meta["us_per_frame"],
+                f * meta["us_per_frame"], *pixel_row(*decode_jpeg(blob)),
             )
 
-    return media.mapInPandas(
-        run,
+    return map_rows(
+        media, frames,
         "media_id long, frame_idx long, n_frames long, us_per_frame long,"
         " ts_us long, width int, height int, px_sum long,"
         " feature_hash string",
@@ -2952,17 +2408,9 @@ def encode_wav_formats_fixture(i: int) -> bytes:
 
 
 def stage_wav_formats(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wavfmt{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.wav"), "wb") as fh:
-                fh.write(encode_wav_formats_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(
+        sf_dir, f"wavfmt{n}", n, "wav", encode_wav_formats_fixture
+    )
 
 
 def multimodal_audio_formats(
@@ -2989,59 +2437,26 @@ def multimodal_audio_formats(
     sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    path = stage_wav_formats(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.wav")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.wav", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_wav_formats(sf_dir, n), "wav")
+
+    def decode(mid, p):
+        meta, s = decode_wav(bytes(p))
+        if meta["format"] == "float":
+            a = np.rint(s.astype(np.float64) * 1024.0).astype(np.int64)
+            kind = "float32"
+        else:
+            a = s.astype(np.int64)
+            kind = f"pcm{meta['bits']}"
+        fam = ("ext_" if meta["extensible"] else "") + kind
+        nf, ch = a.shape
+        w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
+        yield (
+            int(mid), fam, meta["bits"], meta["channels"], nf, nf * ch,
+            int(a.sum()), int(a.min()), int(a.max()), int((w * a).sum()),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                if meta["format"] == "float":
-                    a = np.rint(s.astype(np.float64) * 1024.0).astype(
-                        np.int64
-                    )
-                    kind = "float32"
-                else:
-                    a = s.astype(np.int64)
-                    kind = f"pcm{meta['bits']}"
-                fam = ("ext_" if meta["extensible"] else "") + kind
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        fam,
-                        meta["bits"],
-                        meta["channels"],
-                        nf,
-                        nf * ch,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "family", "bits", "channels", "n_frames",
-                    "n_samples", "q_sum", "q_min", "q_max", "q_wsum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, family string, bits long, channels long,"
         " n_frames long, n_samples long, q_sum long, q_min long,"
         " q_max long, q_wsum long",
@@ -3087,42 +2502,23 @@ def mine_image_text_pairs_semantic(
     from mapreducego_spark.functions.text import tokens_col
     from mapreducego_spark.sources.catalog import load_table
 
-    path = stage_jpeg_pixels(sf_dir, n)
-    media_files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media_files = scan_media(spark, stage_jpeg_pixels(sf_dir, n), "jpg")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def signature(mid, p):
+        w, h, rgb = decode_jpeg_baseline(bytes(p))
+        a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
+        a = a.astype(np.int64)
+        wgt = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
+        bucket = (
+            (np.arange(w) // 8)[None, :] + 8 * (np.arange(h) // 8)[:, None]
+        ) % 64
+        sig = np.zeros(64, dtype=np.int64)
+        np.add.at(sig, bucket, wgt)
+        yield (int(mid), w, h, sig.tolist())
 
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                a = a.astype(np.int64)
-                wgt = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
-                bucket = (
-                    (np.arange(w) // 8)[None, :]
-                    + 8 * (np.arange(h) // 8)[:, None]
-                ) % 64
-                sig = np.zeros(64, dtype=np.int64)
-                np.add.at(sig, bucket, wgt)
-                rows.append((int(mid), w, h, sig.tolist()))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "sig"]
-            )
-
-    media = media_files.mapInPandas(
-        run, "media_id long, width int, height int, sig array<long>"
+    media = map_rows(
+        media_files, signature,
+        "media_id long, width int, height int, sig array<long>",
     )
     caps = (
         load_table(spark, sf_dir, "documents")
@@ -3372,17 +2768,7 @@ def encode_avi_av_fixture(i: int) -> bytes:
 
 
 def stage_avi_av_media(sf_dir: str, n: int = 100) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_avimux{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.avi"), "wb") as fh:
-                fh.write(encode_avi_av_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(sf_dir, f"avimux{n}", n, "avi", encode_avi_av_fixture)
 
 
 def multimodal_video_audio(
@@ -3411,59 +2797,25 @@ def multimodal_video_audio(
     from mapreducego_spark.functions.avicodec import parse_avi_av
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_avi_av_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.avi")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.avi", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_avi_av_media(sf_dir, n), "avi")
+
+    def decode(mid, p):
+        meta, frames, samples = parse_avi_av(bytes(p))
+        v_px_sum = 0
+        for blob in frames:
+            _w, _h, rgb = decode_jpeg(blob)
+            v_px_sum += int(sum(rgb))
+        a = samples.astype(np.int64)
+        nf, ch = a.shape
+        w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
+        yield (
+            int(mid), meta["n_frames"], meta["us_per_frame"], meta["width"],
+            meta["height"], v_px_sum, meta["sample_rate"], ch, nf,
+            int(a.sum()), int(a.min()), int(a.max()), int((w * a).sum()),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames, samples = parse_avi_av(bytes(p))
-                v_px_sum = 0
-                for blob in frames:
-                    _w, _h, rgb = decode_jpeg(blob)
-                    v_px_sum += int(sum(rgb))
-                a = samples.astype(np.int64)
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        meta["n_frames"],
-                        meta["us_per_frame"],
-                        meta["width"],
-                        meta["height"],
-                        v_px_sum,
-                        meta["sample_rate"],
-                        ch,
-                        nf,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "us_per_frame", "width",
-                    "height", "v_px_sum", "sample_rate", "channels",
-                    "n_audio", "a_sum", "a_min", "a_max", "a_wsum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, n_frames long, us_per_frame long, width long,"
         " height long, v_px_sum long, sample_rate long, channels long,"
         " n_audio long, a_sum long, a_min long, a_max long, a_wsum long",
@@ -3500,28 +2852,20 @@ def _gif_fixture_params(i: int):
 def stage_gif_media(sf_dir: str, n: int = 150) -> str:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gif{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            idx = np.array(
-                [[spec["idx"](x, y) for x in range(w)] for y in range(h)],
-                dtype=np.uint8,
-            )
-            blob = encode_gif(
-                w, h,
-                [spec["pal"](j) for j in range(spec["nc"])],
-                [{"indices": idx, "interlace": spec["interlace"]}],
-            )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        spec = _gif_fixture_params(i)
+        w, h = spec["w"], spec["h"]
+        idx = np.array(
+            [[spec["idx"](x, y) for x in range(w)] for y in range(h)],
+            dtype=np.uint8,
+        )
+        return encode_gif(
+            w, h,
+            [spec["pal"](j) for j in range(spec["nc"])],
+            [{"indices": idx, "interlace": spec["interlace"]}],
+        )
+
+    return _stage_media(sf_dir, f"gif{n}", n, "gif", encode)
 
 
 def multimodal_gif_decode(
@@ -3546,50 +2890,20 @@ def multimodal_gif_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.gifcodec import decode_gif
 
-    path = stage_gif_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_gif_media(sf_dir, n), "gif")
+
+    def decode(mid, p):
+        meta, frames = decode_gif(bytes(p))
+        f = frames[0]
+        rgb = np.asarray(f["palette"], dtype=np.uint8)[f["indices"]]
+        yield (
+            int(mid), meta["width"], meta["height"], len(f["palette"]),
+            bool(f["interlaced"]), int(rgb.astype(np.int64).sum()),
+            hashlib.md5(rgb.tobytes().hex().encode()).hexdigest(),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                f = frames[0]
-                pal = np.asarray(f["palette"], dtype=np.uint8)
-                rgb = pal[f["indices"]]
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        len(f["palette"]),
-                        bool(f["interlaced"]),
-                        int(rgb.astype(np.int64).sum()),
-                        hashlib.md5(
-                            rgb.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "table_size",
-                    "interlaced", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, width long, height long, table_size long,"
         " interlaced boolean, px_sum long, feature_hash string",
     ), "media_id")
@@ -3640,47 +2954,39 @@ def _gif_anim_fixture_params(i: int):
 def stage_gif_anim_media(sf_dir: str, n: int = 120) -> str:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gifanim{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_anim_fixture_params(i)
-            frames = []
-            for f in range(spec["n_frames"]):
-                left, top, pw, ph = spec["geom"](f)
-                patch = np.array(
-                    [
-                        [spec["idx"](f, left + dx, top + dy)
-                         for dx in range(pw)]
-                        for dy in range(ph)
-                    ],
-                    dtype=np.uint8,
-                )
-                frames.append(
-                    {
-                        "indices": patch,
-                        "left": left,
-                        "top": top,
-                        "delay_cs": spec["delay"](f),
-                        "transparent": spec["transparent"](f),
-                        "disposal": 1,
-                        "palette": [
-                            spec["lpal"](f, j) for j in range(spec["nc"])
-                        ] if spec["local"](f) else None,
-                    }
-                )
-            blob = encode_gif(
-                spec["w"], spec["h"],
-                [spec["gpal"](j) for j in range(spec["nc"])],
-                frames, loop=True,
+    def encode(i: int) -> bytes:
+        spec = _gif_anim_fixture_params(i)
+        frames = []
+        for f in range(spec["n_frames"]):
+            left, top, pw, ph = spec["geom"](f)
+            patch = np.array(
+                [
+                    [spec["idx"](f, left + dx, top + dy)
+                     for dx in range(pw)]
+                    for dy in range(ph)
+                ],
+                dtype=np.uint8,
             )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+            frames.append(
+                {
+                    "indices": patch,
+                    "left": left,
+                    "top": top,
+                    "delay_cs": spec["delay"](f),
+                    "transparent": spec["transparent"](f),
+                    "disposal": 1,
+                    "palette": [
+                        spec["lpal"](f, j) for j in range(spec["nc"])
+                    ] if spec["local"](f) else None,
+                }
+            )
+        return encode_gif(
+            spec["w"], spec["h"],
+            [spec["gpal"](j) for j in range(spec["nc"])],
+            frames, loop=True,
+        )
+
+    return _stage_media(sf_dir, f"gifanim{n}", n, "gif", encode)
 
 
 def multimodal_gif_frames(
@@ -3711,47 +3017,19 @@ def multimodal_gif_frames(
         decode_gif,
     )
 
-    path = stage_gif_anim_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_gif_anim_media(sf_dir, n), "gif")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                for f, canvas in enumerate(compose_frames(meta, frames)):
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            meta["n_frames"],
-                            frames[f]["delay_cs"],
-                            int(canvas.astype(np.int64).sum()),
-                            hashlib.md5(
-                                canvas.tobytes().hex().encode()
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "delay_cs",
-                    "px_sum", "feature_hash",
-                ],
+    def decode(mid, p):
+        meta, frames = decode_gif(bytes(p))
+        for f, canvas in enumerate(compose_frames(meta, frames)):
+            yield (
+                int(mid), f, meta["n_frames"], frames[f]["delay_cs"],
+                int(canvas.astype(np.int64).sum()),
+                hashlib.md5(canvas.tobytes().hex().encode()).hexdigest(),
             )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, frame_idx long, n_frames long, delay_cs long,"
         " px_sum long, feature_hash string",
     ), "media_id", "frame_idx")
@@ -3794,23 +3072,17 @@ def stage_webdataset_shards(sf_dir: str, n_shards: int = 16) -> str:
 
     from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wds{n_shards}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def shards():
         import duckdb
 
         docs = duckdb.sql(
             f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet'"
             f" ORDER BY doc_id"
         ).fetchall()
+        bufs = [io.BytesIO() for _ in range(n_shards)]
         tars = [
-            tarfile.open(
-                os.path.join(out, f"shard_{s:04d}.tar"),
-                "w", format=tarfile.USTAR_FORMAT,
-            )
-            for s in range(n_shards)
+            tarfile.open(fileobj=b, mode="w", format=tarfile.USTAR_FORMAT)
+            for b in bufs
         ]
 
         def add(tf, name: str, data: bytes) -> None:
@@ -3841,11 +3113,11 @@ def stage_webdataset_shards(sf_dir: str, n_shards: int = 16) -> str:
             key = f"{doc_id:09d}"
             add(tf, key + ".jpg", jpg)
             add(tf, key + ".txt", text.encode("utf-8"))
-        for tf in tars:
+        for s, (tf, buf) in enumerate(zip(tars, bufs)):
             tf.close()
-        with open(marker, "w") as fh:
-            fh.write(str(n_shards))
-    return out
+            yield f"shard_{s:04d}.tar", buf.getvalue()
+
+    return stage_files(sf_dir, f"wds{n_shards}", shards())
 
 
 def walk_wds_members(payload: bytes) -> dict[str, dict[str, bytes]]:
@@ -3912,32 +3184,15 @@ def webdataset_pairs(
         .select(F.col("content").alias("payload"))
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for payload in batch["payload"]:
-                for key, slot in walk_wds_members(payload).items():
-                    w, h, rgb = decode_jpeg(slot["jpg"])
-                    rows.append(
-                        (
-                            int(key),
-                            w,
-                            h,
-                            int(sum(rgb)),
-                            hashlib.md5(rgb.hex().encode()).hexdigest(),
-                            slot["txt"].decode("utf-8"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "px_sum",
-                    "feature_hash", "caption",
-                ],
+    def samples(payload):
+        for key, slot in walk_wds_members(payload).items():
+            yield (
+                int(key), *pixel_row(*decode_jpeg(slot["jpg"])),
+                slot["txt"].decode("utf-8"),
             )
 
-    out = shards.mapInPandas(
-        run,
+    out = map_rows(
+        shards, samples,
         "doc_id long, width int, height int, px_sum long,"
         " feature_hash string, caption string",
     )
@@ -3970,43 +3225,22 @@ def multimodal_audio_resample(
     one Arrow crossing, no shuffle before the presentation sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
+    media = scan_media(spark, stage_wav_media(sf_dir, n), "wav")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                nf, ch = a.shape
-                n_out = nf // 2
-                r = (a[: n_out * 2 : 2] + a[1 : n_out * 2 : 2]
-                     + 65536) // 2 - 32768
-                w = np.arange(n_out * ch, dtype=np.int64).reshape(
-                    n_out, ch
-                ) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        nf,
-                        n_out,
-                        ch,
-                        int(r.sum()),
-                        int(r.min()),
-                        int(r.max()),
-                        int((w * r).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "in_frames", "out_frames", "channels",
-                    "r_sum", "r_min", "r_max", "r_wsum",
-                ],
-            )
+    def resample(mid, p):
+        meta, s = decode_wav(bytes(p))
+        a = s.astype(np.int64)
+        nf, ch = a.shape
+        n_out = nf // 2
+        r = (a[: n_out * 2 : 2] + a[1 : n_out * 2 : 2] + 65536) // 2 - 32768
+        w = np.arange(n_out * ch, dtype=np.int64).reshape(n_out, ch) + 1
+        yield (
+            int(mid), nf, n_out, ch, int(r.sum()), int(r.min()),
+            int(r.max()), int((w * r).sum()),
+        )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, resample,
         "media_id long, in_frames long, out_frames long, channels long,"
         " r_sum long, r_min long, r_max long, r_wsum long",
     ), "media_id")
@@ -4062,42 +3296,35 @@ def _bmp_fixture_params(i: int):
 def stage_bmp_media(sf_dir: str, n: int = 150) -> str:
     from mapreducego_spark.functions.bmpcodec import encode_bmp
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    def encode(i: int) -> bytes:
+        spec = _bmp_fixture_params(i)
+        w, h = spec["w"], spec["h"]
+        if spec["family"] in ("rgb24", "td24"):
+            px = np.array(
+                [[spec["rgb"](x, y) for x in range(w)]
+                 for y in range(h)],
+                dtype=np.uint8,
+            )
+            blob = encode_bmp(
+                w, h, px, topdown=spec["family"] == "td24"
+            )
+        else:
+            px = np.array(
+                [[spec["idx"](x, y) for x in range(w)]
+                 for y in range(h)],
+                dtype=np.uint8,
+            )
+            blob = encode_bmp(
+                w, h, px,
+                [spec["pal"](j) for j in range(spec["nc"])],
+                rle=spec["family"] in ("rle8", "rle8d"),
+                delta_sparse=spec["family"] == "rle8d",
+            )
+        return blob
+
     # dir version B: r14 extended the family cycle (top-down, delta
     # RLE) — the _STAGED marker must not satisfy old content
-    out = f"/tmp/spark_graft_media/{tag}_bmpB{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _bmp_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            if spec["family"] in ("rgb24", "td24"):
-                px = np.array(
-                    [[spec["rgb"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                blob = encode_bmp(
-                    w, h, px, topdown=spec["family"] == "td24"
-                )
-            else:
-                px = np.array(
-                    [[spec["idx"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                blob = encode_bmp(
-                    w, h, px,
-                    [spec["pal"](j) for j in range(spec["nc"])],
-                    rle=spec["family"] in ("rle8", "rle8d"),
-                    delta_sparse=spec["family"] == "rle8d",
-                )
-            with open(os.path.join(out, f"media_{i:05d}.bmp"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return _stage_media(sf_dir, f"bmpB{n}", n, "bmp", encode)
 
 
 def multimodal_bmp_decode(
@@ -4124,46 +3351,18 @@ def multimodal_bmp_decode(
     before the presentation sort."""
     from mapreducego_spark.functions.bmpcodec import decode_bmp
 
-    path = stage_bmp_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.bmp")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.bmp", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_bmp_media(sf_dir, n), "bmp")
+
+    def decode(mid, p):
+        meta, rgb = decode_bmp(bytes(p))
+        yield (
+            int(mid), meta["width"], meta["height"], meta["compression"],
+            int(rgb.astype(np.int64).sum()),
+            hashlib.md5(rgb.tobytes().hex().encode()).hexdigest(),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, rgb = decode_bmp(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["compression"],
-                        int(rgb.astype(np.int64).sum()),
-                        hashlib.md5(
-                            rgb.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "family",
-                    "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, width long, height long, family string,"
         " px_sum long, feature_hash string",
     ), "media_id")
@@ -4212,47 +3411,39 @@ def _tiff_fixture_params(i: int):
 def stage_tiff_media(sf_dir: str, n: int = 180) -> str:
     from mapreducego_spark.functions.tiffcodec import encode_tiff
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_tiffD{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _tiff_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            fam = spec["family"]
-            pb = fam.endswith("pb")
-            lzw = "lzw" in fam
-            zip_ = "zip" in fam
-            if fam.startswith("rgb"):
-                px = np.array(
-                    [[spec["rgb"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                photometric = 2
-            else:
-                px = np.array(
-                    [[spec["gray"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                photometric = 1
-                if fam.startswith("white0"):
-                    # store the INVERTED samples; decode restores
-                    px = (255 - px.astype(np.int16)).astype(np.uint8)
-                    photometric = 0
-            blob = encode_tiff(
-                px, photometric, spec["byte_order"],
-                packbits=pb, rows_per_strip=spec["rps"],
-                lzw=lzw, deflate=zip_,
-                predictor=2 if fam.endswith("lzwp") else 1,
+    def encode(i: int) -> bytes:
+        spec = _tiff_fixture_params(i)
+        w, h = spec["w"], spec["h"]
+        fam = spec["family"]
+        pb = fam.endswith("pb")
+        lzw = "lzw" in fam
+        zip_ = "zip" in fam
+        if fam.startswith("rgb"):
+            px = np.array(
+                [[spec["rgb"](x, y) for x in range(w)]
+                 for y in range(h)],
+                dtype=np.uint8,
             )
-            with open(os.path.join(out, f"media_{i:05d}.tif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+            photometric = 2
+        else:
+            px = np.array(
+                [[spec["gray"](x, y) for x in range(w)]
+                 for y in range(h)],
+                dtype=np.uint8,
+            )
+            photometric = 1
+            if fam.startswith("white0"):
+                # store the INVERTED samples; decode restores
+                px = (255 - px.astype(np.int16)).astype(np.uint8)
+                photometric = 0
+        return encode_tiff(
+            px, photometric, spec["byte_order"],
+            packbits=pb, rows_per_strip=spec["rps"],
+            lzw=lzw, deflate=zip_,
+            predictor=2 if fam.endswith("lzwp") else 1,
+        )
+
+    return _stage_media(sf_dir, f"tiffD{n}", n, "tif", encode)
 
 
 def multimodal_tiff_decode(
@@ -4285,48 +3476,19 @@ def multimodal_tiff_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.tiffcodec import decode_tiff
 
-    path = stage_tiff_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.tif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.tif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_tiff_media(sf_dir, n), "tif")
+
+    def decode(mid, p):
+        meta, px = decode_tiff(bytes(p))
+        yield (
+            int(mid), meta["width"], meta["height"], meta["family"],
+            meta["byte_order"], meta["n_strips"],
+            int(px.astype(np.int64).sum()),
+            hashlib.md5(px.tobytes().hex().encode()).hexdigest(),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, px = decode_tiff(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["family"],
-                        meta["byte_order"],
-                        meta["n_strips"],
-                        int(px.astype(np.int64).sum()),
-                        hashlib.md5(
-                            px.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "family",
-                    "byte_order", "n_strips", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, width long, height long, family string,"
         " byte_order string, n_strips long, px_sum long,"
         " feature_hash string",
@@ -4416,54 +3578,46 @@ def _webp_fixture_params(i: int):
 def stage_webp_media(sf_dir: str, n: int = 162) -> str:
     from mapreducego_spark.functions.vp8lcodec import encode_vp8l
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_webpC{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _webp_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            px = np.array(
-                [[spec["rgba"](x, y) for x in range(w)]
-                 for y in range(h)],
-                dtype=np.uint8,
+    def encode(i: int) -> bytes:
+        spec = _webp_fixture_params(i)
+        w, h = spec["w"], spec["h"]
+        px = np.array(
+            [[spec["rgba"](x, y) for x in range(w)]
+             for y in range(h)],
+            dtype=np.uint8,
+        )
+        fam = spec["family"]
+        kwargs: dict = {}
+        if fam == "subgreen":
+            kwargs["transform"] = "subtract_green"
+        elif fam in ("pred", "predtr"):
+            kwargs.update(
+                transform="predictor", tile_bits=2,
+                predictor_mode_fn=spec["mode_fn"],
             )
-            fam = spec["family"]
-            kwargs: dict = {}
-            if fam == "subgreen":
-                kwargs["transform"] = "subtract_green"
-            elif fam in ("pred", "predtr"):
-                kwargs.update(
-                    transform="predictor", tile_bits=2,
-                    predictor_mode_fn=spec["mode_fn"],
-                )
-            elif fam == "meta":
-                kwargs["meta"] = (2, spec["group_fn"])
-            elif fam == "ctrans":
-                kwargs.update(
-                    transform="color", tile_bits=2,
-                    color_cte_fn=spec["cte_fn"],
-                )
-            elif fam == "palette":
-                pal = []
-                for j in range(spec["n_pal"]):
-                    r = (i * 11 + j * 29) % 256
-                    g = (i * 13 + j * 31) % 256
-                    b = (i * 17 + j * 37) % 256
-                    a = (j * 7 + 1) % 256
-                    pal.append((a << 24) | (r << 16) | (g << 8) | b)
-                kwargs.update(transform="color_indexing", palette=pal)
-            elif fam == "lz77":
-                kwargs["lz77"] = True
-            elif fam == "cache":
-                kwargs["cache_bits"] = 6
-            blob = encode_vp8l(px, **kwargs)
-            with open(os.path.join(out, f"media_{i:05d}.webp"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+        elif fam == "meta":
+            kwargs["meta"] = (2, spec["group_fn"])
+        elif fam == "ctrans":
+            kwargs.update(
+                transform="color", tile_bits=2,
+                color_cte_fn=spec["cte_fn"],
+            )
+        elif fam == "palette":
+            pal = []
+            for j in range(spec["n_pal"]):
+                r = (i * 11 + j * 29) % 256
+                g = (i * 13 + j * 31) % 256
+                b = (i * 17 + j * 37) % 256
+                a = (j * 7 + 1) % 256
+                pal.append((a << 24) | (r << 16) | (g << 8) | b)
+            kwargs.update(transform="color_indexing", palette=pal)
+        elif fam == "lz77":
+            kwargs["lz77"] = True
+        elif fam == "cache":
+            kwargs["cache_bits"] = 6
+        return encode_vp8l(px, **kwargs)
+
+    return _stage_media(sf_dir, f"webpC{n}", n, "webp", encode)
 
 
 def multimodal_webp_decode(
@@ -4496,48 +3650,19 @@ def multimodal_webp_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.vp8lcodec import decode_webp
 
-    path = stage_webp_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.webp")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.webp", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    media = scan_media(spark, stage_webp_media(sf_dir, n), "webp")
+
+    def decode(mid, p):
+        meta, px = decode_webp(bytes(p))
+        yield (
+            int(mid), meta["width"], meta["height"], meta["transforms"],
+            meta["cache_bits"], meta["n_groups"],
+            int(px.astype(np.int64).sum()),
+            hashlib.md5(px.tobytes().hex().encode()).hexdigest(),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, px = decode_webp(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["transforms"],
-                        meta["cache_bits"],
-                        meta["n_groups"],
-                        int(px.astype(np.int64).sum()),
-                        hashlib.md5(
-                            px.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "transforms",
-                    "cache_bits", "n_groups", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, width long, height long, transforms string,"
         " cache_bits long, n_groups long, px_sum long,"
         " feature_hash string",
@@ -4626,30 +3751,23 @@ def stage_mp3_media(sf_dir: str, n: int = 240) -> str:
         build_mp3_vbr,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_mp3b{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp3_fixture_params(i)
-            if p["vbr"]:
-                data = build_mp3_vbr(
-                    p["rate"], p["n_frames"], p["mode"],
-                    p["id3v2_pad"], p["id3v1"], kind=p["vbr_kind"],
-                    kbps_fn=lambda j, i=i: _MP3_KBPS_CYCLE[(i + 2 * j) % 14],
-                    seed=i,
-                )
-            else:
-                data = build_mp3(
-                    p["kbps"], p["rate"], p["n_frames"], p["mode"],
-                    p["id3v2_pad"], p["id3v1"], seed=i,
-                )
-            with open(os.path.join(out, f"media_{i:05d}.mp3"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        p = _mp3_fixture_params(i)
+        if p["vbr"]:
+            data = build_mp3_vbr(
+                p["rate"], p["n_frames"], p["mode"],
+                p["id3v2_pad"], p["id3v1"], kind=p["vbr_kind"],
+                kbps_fn=lambda j, i=i: _MP3_KBPS_CYCLE[(i + 2 * j) % 14],
+                seed=i,
+            )
+        else:
+            data = build_mp3(
+                p["kbps"], p["rate"], p["n_frames"], p["mode"],
+                p["id3v2_pad"], p["id3v1"], seed=i,
+            )
+        return data
+
+    return _stage_media(sf_dir, f"mp3b{n}", n, "mp3", encode)
 
 
 def stage_mp4_media(sf_dir: str, n: int = 240) -> str:
@@ -4658,51 +3776,27 @@ def stage_mp4_media(sf_dir: str, n: int = 240) -> str:
         build_mp4_fragmented,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_mp4b{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp4_fixture_params(i)
-            acodec = None if p["acodec"] is None else p["acodec"].encode()
-            if p["fragmented"]:
-                data = build_mp4_fragmented(
-                    p["brand"].encode(), p["timescale"], p["width"],
-                    p["height"], p["vcodec"].encode(), acodec,
-                    p["v1_times"], p["fragments"], p["trex_default"],
-                    seed=i,
-                )
-            else:
-                data = build_mp4(
-                    p["brand"].encode(), p["timescale"], p["duration"],
-                    p["width"], p["height"], p["vcodec"].encode(),
-                    acodec, p["v1_times"], p["mdat_size"],
-                    mdat_largesize=p["mdat_largesize"],
-                    mdat_to_eof=p["mdat_to_eof"], seed=i,
-                )
-            with open(os.path.join(out, f"media_{i:05d}.mp4"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        p = _mp4_fixture_params(i)
+        acodec = None if p["acodec"] is None else p["acodec"].encode()
+        if p["fragmented"]:
+            data = build_mp4_fragmented(
+                p["brand"].encode(), p["timescale"], p["width"],
+                p["height"], p["vcodec"].encode(), acodec,
+                p["v1_times"], p["fragments"], p["trex_default"],
+                seed=i,
+            )
+        else:
+            data = build_mp4(
+                p["brand"].encode(), p["timescale"], p["duration"],
+                p["width"], p["height"], p["vcodec"].encode(),
+                acodec, p["v1_times"], p["mdat_size"],
+                mdat_largesize=p["mdat_largesize"],
+                mdat_to_eof=p["mdat_to_eof"], seed=i,
+            )
+        return data
 
-
-def _media_df(spark: SparkSession, path: str, ext: str) -> DataFrame:
-    # dir load + pathGlobFilter, never a glob-in-path: the glob form
-    # forces a driver-side expansion listing measured ~20x slower on
-    # large staged dirs (NOTES_r14, commit 900a1b4)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"media_*.{ext}")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), rf"media_(\d+)\.{ext}", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    return _stage_media(sf_dir, f"mp4b{n}", n, "mp4", encode)
 
 
 def multimodal_mp3_meta(
@@ -4731,32 +3825,18 @@ def multimodal_mp3_meta(
     before the presentation sort."""
     from mapreducego_spark.functions.mediameta import parse_mp3_meta
 
-    media = _media_df(spark, stage_mp3_media(sf_dir, n), "mp3")
+    media = scan_media(spark, stage_mp3_media(sf_dir, n), "mp3")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_mp3_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["tag_bytes"], m["bitrate_kbps"],
-                        m["sample_rate"], m["channels"], m["n_frames"],
-                        m["audio_bytes"], m["vbr"], m["has_id3v1"],
-                        m["duration_ms"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "tag_bytes", "bitrate_kbps", "sample_rate",
-                    "channels", "n_frames", "audio_bytes", "vbr",
-                    "has_id3v1", "duration_ms",
-                ],
-            )
+    def parse(mid, p):
+        m = parse_mp3_meta(bytes(p))
+        yield (
+            int(mid), m["tag_bytes"], m["bitrate_kbps"], m["sample_rate"],
+            m["channels"], m["n_frames"], m["audio_bytes"], m["vbr"],
+            m["has_id3v1"], m["duration_ms"],
+        )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, tag_bytes long, bitrate_kbps long,"
         " sample_rate long, channels long, n_frames long,"
         " audio_bytes long, vbr boolean, has_id3v1 boolean,"
@@ -4790,33 +3870,19 @@ def multimodal_mp4_meta(
     mdat at all."""
     from mapreducego_spark.functions.mediameta import parse_mp4_meta
 
-    media = _media_df(spark, stage_mp4_media(sf_dir, n), "mp4")
+    media = scan_media(spark, stage_mp4_media(sf_dir, n), "mp4")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_mp4_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["brand"], m["timescale"], m["duration"],
-                        m["duration_ms"], m["n_tracks"], m["width"],
-                        m["height"], m["video_codec"], m["audio_codec"],
-                        m["fragmented"], m["n_fragments"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "brand", "timescale", "duration",
-                    "duration_ms", "n_tracks", "width", "height",
-                    "video_codec", "audio_codec", "fragmented",
-                    "n_fragments",
-                ],
-            )
+    def parse(mid, p):
+        m = parse_mp4_meta(bytes(p))
+        yield (
+            int(mid), m["brand"], m["timescale"], m["duration"],
+            m["duration_ms"], m["n_tracks"], m["width"], m["height"],
+            m["video_codec"], m["audio_codec"], m["fragmented"],
+            m["n_fragments"],
+        )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, brand string, timescale long, duration long,"
         " duration_ms long, n_tracks long, width long, height long,"
         " video_codec string, audio_codec string, fragmented boolean,"
@@ -4861,32 +3927,25 @@ def stage_mp3_tag_media(sf_dir: str, n: int = 240) -> str:
         build_id3v2,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_id3a{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp3_tag_fixture_params(i)
-            raw = (
-                [("PRIV", b"owner\x00" + bytes((i + k) % 251
-                                               for k in range(20)))]
-                if p["priv"] else None
-            )
-            data = build_id3v2(
-                p["frames"], version=p["version"], pad=p["pad"],
-                raw_frames=raw,
-            )
-            # one real CBR audio frame so the file IS an MP3
-            data += _mp3_frame(
-                9, 0, 0, 0,
-                lambda sz, i=i: bytes((i + k) % 251 for k in range(sz)),
-            )
-            with open(os.path.join(out, f"media_{i:05d}.mp3"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        p = _mp3_tag_fixture_params(i)
+        raw = (
+            [("PRIV", b"owner\x00" + bytes((i + k) % 251
+                                           for k in range(20)))]
+            if p["priv"] else None
+        )
+        data = build_id3v2(
+            p["frames"], version=p["version"], pad=p["pad"],
+            raw_frames=raw,
+        )
+        # one real CBR audio frame so the file IS an MP3
+        data += _mp3_frame(
+            9, 0, 0, 0,
+            lambda sz, i=i: bytes((i + k) % 251 for k in range(sz)),
+        )
+        return data
+
+    return _stage_media(sf_dir, f"id3a{n}", n, "mp3", encode)
 
 
 def multimodal_mp3_tags(
@@ -4913,32 +3972,19 @@ def multimodal_mp3_tags(
     before the presentation sort."""
     from mapreducego_spark.functions.mediameta import parse_id3v2_frames
 
-    media = _media_df(spark, stage_mp3_tag_media(sf_dir, n), "mp3")
+    media = scan_media(spark, stage_mp3_tag_media(sf_dir, n), "mp3")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                payload = bytes(p)
-                version = payload[3]
-                _, frames = parse_id3v2_frames(payload)
-                for j, fr in enumerate(frames):
-                    rows.append(
-                        (
-                            int(mid), version, j, fr["frame_id"],
-                            fr["encoding"], fr["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "tag_version", "frame_idx", "frame_id",
-                    "encoding", "text",
-                ],
+    def parse(mid, p):
+        payload = bytes(p)
+        _, frames = parse_id3v2_frames(payload)
+        for j, fr in enumerate(frames):
+            yield (
+                int(mid), payload[3], j, fr["frame_id"], fr["encoding"],
+                fr["text"],
             )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, parse,
         "media_id long, tag_version long, frame_idx long,"
         " frame_id string, encoding long, text string",
     ), "media_id", "frame_idx")
@@ -4981,47 +4027,39 @@ def _gif_disposal_fixture_params(i: int):
 def stage_gif_disposal_media(sf_dir: str, n: int = 120) -> str:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gifdisp{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_disposal_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            base = np.array(
-                [[spec["base"](x, y) for x in range(w)] for y in range(h)],
-                dtype=np.uint8,
-            )
-            x1, y1, w1, h1 = spec["r1"]
-            patch1 = np.array(
-                [[spec["p1"](dx, dy) for dx in range(w1)]
-                 for dy in range(h1)],
-                dtype=np.uint8,
-            )
-            x2, y2, w2, h2 = spec["r2"]
-            patch2 = np.array(
-                [[spec["p2"](dx, dy) for dx in range(w2)]
-                 for dy in range(h2)],
-                dtype=np.uint8,
-            )
-            frames = [
-                {"indices": base, "delay_cs": 2,
-                 "disposal": 2 if spec["wipe"] else 1},
-                {"indices": patch1, "left": x1, "top": y1,
-                 "delay_cs": 4, "transparent": 0, "disposal": 3},
-                {"indices": patch2, "left": x2, "top": y2,
-                 "delay_cs": 6, "disposal": 0},
-            ]
-            blob = encode_gif(
-                w, h, [spec["gpal"](j) for j in range(spec["nc"])],
-                frames, bg_index=1, loop=True,
-            )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    def encode(i: int) -> bytes:
+        spec = _gif_disposal_fixture_params(i)
+        w, h = spec["w"], spec["h"]
+        base = np.array(
+            [[spec["base"](x, y) for x in range(w)] for y in range(h)],
+            dtype=np.uint8,
+        )
+        x1, y1, w1, h1 = spec["r1"]
+        patch1 = np.array(
+            [[spec["p1"](dx, dy) for dx in range(w1)]
+             for dy in range(h1)],
+            dtype=np.uint8,
+        )
+        x2, y2, w2, h2 = spec["r2"]
+        patch2 = np.array(
+            [[spec["p2"](dx, dy) for dx in range(w2)]
+             for dy in range(h2)],
+            dtype=np.uint8,
+        )
+        frames = [
+            {"indices": base, "delay_cs": 2,
+             "disposal": 2 if spec["wipe"] else 1},
+            {"indices": patch1, "left": x1, "top": y1,
+             "delay_cs": 4, "transparent": 0, "disposal": 3},
+            {"indices": patch2, "left": x2, "top": y2,
+             "delay_cs": 6, "disposal": 0},
+        ]
+        return encode_gif(
+            w, h, [spec["gpal"](j) for j in range(spec["nc"])],
+            frames, bg_index=1, loop=True,
+        )
+
+    return _stage_media(sf_dir, f"gifdisp{n}", n, "gif", encode)
 
 
 def multimodal_gif_disposal(
@@ -5049,46 +4087,19 @@ def multimodal_gif_disposal(
         decode_gif,
     )
 
-    path = stage_gif_disposal_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_gif_disposal_media(sf_dir, n), "gif")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                for f, canvas in enumerate(compose_frames(meta, frames)):
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            frames[f]["disposal"],
-                            int(canvas.astype(np.int64).sum()),
-                            hashlib.md5(
-                                canvas.tobytes().hex().encode()
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "disposal",
-                    "px_sum", "feature_hash",
-                ],
+    def decode(mid, p):
+        meta, frames = decode_gif(bytes(p))
+        for f, canvas in enumerate(compose_frames(meta, frames)):
+            yield (
+                int(mid), f, frames[f]["disposal"],
+                int(canvas.astype(np.int64).sum()),
+                hashlib.md5(canvas.tobytes().hex().encode()).hexdigest(),
             )
 
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, decode,
         "media_id long, frame_idx long, disposal long,"
         " px_sum long, feature_hash string",
     ), "media_id", "frame_idx")
@@ -5128,39 +4139,32 @@ def _png_lowdepth_fixture(i: int):
 
 
 def stage_png_lowdepth(sf_dir: str, n: int = 200) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pnglow{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _png_lowdepth_fixture(i)
-            w, h = spec["w"], spec["h"]
-            samples = bytes(
-                spec["sample"](x, y) for y in range(h) for x in range(w)
+    def encode(i: int) -> bytes:
+        spec = _png_lowdepth_fixture(i)
+        w, h = spec["w"], spec["h"]
+        samples = bytes(
+            spec["sample"](x, y) for y in range(h) for x in range(w)
+        )
+        if spec["kind"][0] == "g":
+            blob = encode_png_sub8(
+                w, h, 0, spec["depth"], samples,
+                interlace=spec["interlace"],
             )
-            if spec["kind"][0] == "g":
-                blob = encode_png_sub8(
-                    w, h, 0, spec["depth"], samples,
-                    interlace=spec["interlace"],
-                )
-            else:
-                pal = bytes(
-                    v for j in range(spec["mx"]) for v in spec["pal"](j)
-                )
-                trns = (
-                    bytes(spec["trns"](j) for j in range(spec["tn"]))
-                    if spec["tn"] else None
-                )
-                blob = encode_png_sub8(
-                    w, h, 3, spec["depth"], samples, palette=pal,
-                    trns=trns, interlace=spec["interlace"],
-                )
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+        else:
+            pal = bytes(
+                v for j in range(spec["mx"]) for v in spec["pal"](j)
+            )
+            trns = (
+                bytes(spec["trns"](j) for j in range(spec["tn"]))
+                if spec["tn"] else None
+            )
+            blob = encode_png_sub8(
+                w, h, 3, spec["depth"], samples, palette=pal,
+                trns=trns, interlace=spec["interlace"],
+            )
+        return blob
+
+    return _stage_media(sf_dir, f"pnglow{n}", n, "png", encode)
 
 
 def multimodal_png_lowdepth(
@@ -5181,48 +4185,10 @@ def multimodal_png_lowdepth(
 
     Scale shape: distributed scan, one Arrow crossing, no shuffle
     before the presentation sort."""
-    path = stage_png_lowdepth(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    media = scan_media(spark, stage_png_lowdepth(sf_dir, n), "png")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb, alpha = decode_png_rgba(bytes(p))
-                rgba = bytearray()
-                for k in range(w * h):
-                    rgba += rgb[3 * k : 3 * k + 3]
-                    rgba.append(alpha[k])
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        int(sum(alpha)),
-                        hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "a_sum",
-                    "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return sort_once(map_rows(
+        media, _decode_rgba,
         "media_id long, width long, height long, px_sum long,"
         " a_sum long, feature_hash string",
     ), "media_id")

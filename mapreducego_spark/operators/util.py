@@ -10,8 +10,13 @@ produce bit-identical values.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def dec(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
@@ -96,11 +101,14 @@ def sort_once(df, *cols):
       - "orderby": plain orderBy — no storage at all, at the cost of
         re-executing the decode under the range sampler (the very
         double execution this helper exists to remove).
-    Blocks from either storing mode are dropped when the DataFrame
-    is garbage-collected (ContextCleaner), the same lifecycle every
-    bench rep and the long-session REPL rely on; callers that hold
-    many sorted frames alive simultaneously should prefer "persist"
-    and unpersist explicitly.
+    The two storing modes differ in lifetime. Lazy localCheckpoint
+    blocks belong to the checkpointed RDD and are dropped by the
+    ContextCleaner once that RDD is garbage-collected. A persist()
+    registers the plan in the session's CacheManager, which holds a
+    strong reference to it: those blocks stay cached until the
+    persisted frame is unpersisted, however long the session runs.
+    sort_once returns only the sorted frame above it, so long-lived
+    sessions using "persist" must call ``spark.catalog.clearCache()``.
 
     The eager=False fusion relies on RangePartitioner's sampling job
     materializing the lazily-checkpointed partitions as a side
@@ -168,3 +176,56 @@ def spread_scan(df):
     if n_parts < target:
         return df.repartition(target)
     return df
+
+
+def map_rows(df, fn, schema):
+    """Per-row Python map over ``df`` in one Arrow-batched mapInPandas
+    pass — the decode tier's single pandas-UDF adapter.
+
+    ``fn`` is called with one input row's column values, in ``df``'s
+    column order, and is a generator: it yields zero or more output
+    tuples laid out as ``schema`` (a DDL string or StructType). So one
+    contract covers 1:1 decoders, 1:n fan-outs (frames, pages,
+    archive records) and rows that produce nothing. Batch iteration,
+    row collection and the output frame's column names (taken from
+    ``schema``, never spelled twice) live here only."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+
+    def run(batches):
+        for batch in batches:
+            cols = [batch[c] for c in batch.columns]
+            rows = [out for values in zip(*cols) for out in fn(*values)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+def stage_files(sf_dir: str, name: str, files) -> str:
+    """Write fixture files once into
+    ``<tempdir>/spark_graft_media/<sf tag>_<name>`` and return that
+    directory (test/fixture plumbing, driver-side by design — in
+    production media arrives as files; this stages them).
+
+    ``files`` yields ``(file name, bytes)`` pairs and is consumed only
+    when the directory has no ``_STAGED`` marker yet; the marker then
+    records the file count. Staging is therefore idempotent, and
+    ``name`` must carry the fixture VERSION (``warcb``, ``tiffD``, ...):
+    content written under an old name is never overwritten. The root
+    is ``tempfile.gettempdir()``, so ``TMPDIR`` relocates it."""
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    out = os.path.join(
+        tempfile.gettempdir(), "spark_graft_media", f"{tag}_{name}"
+    )
+    marker = os.path.join(out, "_STAGED")
+    if not os.path.exists(marker):
+        os.makedirs(out, exist_ok=True)
+        n = 0
+        for fname, data in files:
+            with open(os.path.join(out, fname), "wb") as fh:
+                fh.write(data)
+            n += 1
+        with open(marker, "w") as fh:
+            fh.write(str(n))
+    return out

@@ -15,9 +15,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreducego_spark.operators.util import (
+    map_rows,
     merge_small_splits,
     sort_once,
     spread_scan,
+    stage_files,
 )
 
 # The driver-provisioned star schema + LLM-pipeline tables
@@ -1342,14 +1344,7 @@ def stage_warc_archives(sf_dir: str, n_files: int = 16) -> str:
         gzip_member,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    # staging-dir suffix is the fixture VERSION: the _STAGED marker
-    # makes staging idempotent, so any change to the served HTML
-    # must bump it ("b" = the out-link list for warc_link_graph)
-    out = f"/tmp/spark_graft_media/{tag}_warcb{n_files}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def files():
         import duckdb
 
         docs = duckdb.sql(
@@ -1379,13 +1374,12 @@ def stage_warc_archives(sf_dir: str, n_files: int = 16) -> str:
                 )
             )
         for f in range(n_files):
-            with open(
-                os.path.join(out, f"crawl_{f:04d}.warc.gz"), "wb"
-            ) as fh:
-                fh.write(b"".join(parts[f]))
-        with open(marker, "w") as fh:
-            fh.write(str(n_files))
-    return out
+            yield f"crawl_{f:04d}.warc.gz", b"".join(parts[f])
+
+    # staging-dir suffix is the fixture VERSION: the _STAGED marker
+    # makes staging idempotent, so any change to the served HTML
+    # must bump it ("b" = the out-link list for warc_link_graph)
+    return stage_files(sf_dir, f"warcb{n_files}", files())
 
 
 def warc_extract_text(
@@ -1416,10 +1410,8 @@ def warc_extract_text(
     decode is one Arrow crossing, no shuffle before the presentation
     sort; at 100 TB the same per-record gzip-member boundaries this
     codec writes let readers split archives by byte range."""
-    from collections.abc import Iterator as _Iterator
     import re as _re
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.warccodec import (
@@ -1435,39 +1427,21 @@ def warc_extract_text(
         .select("content")
     )
 
-    def run(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for payload in batch["content"]:
-                for rec in parse_warc(bytes(payload)):
-                    if rec["warc_type"] != "response":
-                        continue
-                    m = _re.search(r"/(\d+)\.html$", rec["url"])
-                    if m is None:
-                        raise ValueError(
-                            f"unexpected fixture URL {rec['url']!r}"
-                        )
-                    rows.append(
-                        (
-                            int(m.group(1)),
-                            rec["url"],
-                            rec["date_s"],
-                            rec["http_status"],
-                            rec["mime"],
-                            len(rec["body"]),
-                            extract_html_text(rec["body"].decode("utf-8")),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "url", "warc_date_s", "http_status",
-                    "mime", "body_bytes", "text",
-                ],
+    def records(payload):
+        for rec in parse_warc(bytes(payload)):
+            if rec["warc_type"] != "response":
+                continue
+            m = _re.search(r"/(\d+)\.html$", rec["url"])
+            if m is None:
+                raise ValueError(f"unexpected fixture URL {rec['url']!r}")
+            yield (
+                int(m.group(1)), rec["url"], rec["date_s"],
+                rec["http_status"], rec["mime"], len(rec["body"]),
+                extract_html_text(rec["body"].decode("utf-8")),
             )
 
-    out = files.mapInPandas(
-        run,
+    out = map_rows(
+        files, records,
         "doc_id long, url string, warc_date_s long, http_status int,"
         " mime string, body_bytes long, text string",
     )
@@ -1498,10 +1472,7 @@ def warc_link_graph(
     as warc_extract_text; the edge list shuffles only for the
     presentation sort. At 100 TB this feeds a groupBy(dst) in-degree
     or the graph tier's PageRank directly."""
-    from collections.abc import Iterator as _Iterator
     import re as _re
-
-    import pandas as pd
 
     from mapreducego_spark.sources.warccodec import parse_warc
 
@@ -1515,49 +1486,24 @@ def warc_link_graph(
     href_re = _re.compile(r'<a href="([^"]*)">([^<]*)</a>')
     url_re = _re.compile(r"^http://crawl\.example\.com/([^/]+)/(\d+)\.html$")
 
-    def run(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for payload in batch["content"]:
-                for rec in parse_warc(bytes(payload)):
-                    if rec["warc_type"] != "response":
-                        continue
-                    m = url_re.match(rec["url"])
-                    if m is None:
-                        raise ValueError(
-                            f"unexpected fixture URL {rec['url']!r}"
-                        )
-                    src_id = int(m.group(2))
-                    html_doc = rec["body"].decode("utf-8")
-                    for k, (href, anchor) in enumerate(
-                        href_re.findall(html_doc)
-                    ):
-                        t = url_re.match(href)
-                        if t is None:
-                            raise ValueError(
-                                f"unparseable link target {href!r}"
-                            )
-                        rows.append(
-                            (
-                                src_id,
-                                k,
-                                int(t.group(2)),
-                                t.group(1),
-                                href,
-                                anchor,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "src_doc_id", "link_idx", "dst_doc_id",
-                    "dst_source", "dst_url", "anchor",
-                ],
-            )
+    def links(payload):
+        for rec in parse_warc(bytes(payload)):
+            if rec["warc_type"] != "response":
+                continue
+            m = url_re.match(rec["url"])
+            if m is None:
+                raise ValueError(f"unexpected fixture URL {rec['url']!r}")
+            src_id = int(m.group(2))
+            html_doc = rec["body"].decode("utf-8")
+            for k, (href, anchor) in enumerate(href_re.findall(html_doc)):
+                t = url_re.match(href)
+                if t is None:
+                    raise ValueError(f"unparseable link target {href!r}")
+                yield (src_id, k, int(t.group(2)), t.group(1), href, anchor)
 
     return sort_once(
-        files.mapInPandas(
-            run,
+        map_rows(
+            files, links,
             "src_doc_id long, link_idx long, dst_doc_id long,"
             " dst_source string, dst_url string, anchor string",
         ),
@@ -1612,11 +1558,7 @@ def stage_pdf_files(sf_dir: str) -> str:
         render_page_content,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pdfe"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def files():
         import duckdb
 
         docs = duckdb.sql(
@@ -1652,11 +1594,9 @@ def stage_pdf_files(sf_dir: str) -> str:
                 pdf = build_pdf(contents, compress, font_form=font_form)
                 if form == 2:
                     pdf = append_incremental_update(pdf, f"doc {doc_id}")
-            with open(os.path.join(out, f"doc_{doc_id:07d}.pdf"), "wb") as fh:
-                fh.write(pdf)
-        with open(marker, "w") as fh:
-            fh.write(str(len(docs)))
-    return out
+            yield f"doc_{doc_id:07d}.pdf", pdf
+
+    return stage_files(sf_dir, "pdfe", files())
 
 
 def pdf_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1708,10 +1648,8 @@ def pdf_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     are not internally splittable, matching real corpora where the
     per-file grain is the distribution grain), the decode is one
     Arrow crossing, no shuffle before the presentation sort."""
-    from collections.abc import Iterator as _Iterator
     import re as _re
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.pdfcodec import parse_pdf
@@ -1725,41 +1663,22 @@ def pdf_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     id_re = _re.compile(r"/doc_(\d+)\.pdf$")
 
-    def run(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for fpath, payload in zip(batch["path"], batch["content"]):
-                m = id_re.search(fpath)
-                if m is None:
-                    raise ValueError(f"unexpected fixture path {fpath!r}")
-                doc_id = int(m.group(1))
-                parsed = parse_pdf(bytes(payload))
-                n_pages = len(parsed["pages"])
-                for p, page in enumerate(parsed["pages"]):
-                    rows.append(
-                        (
-                            doc_id,
-                            p,
-                            n_pages,
-                            parsed["n_objects"],
-                            parsed["xref_form"],
-                            parsed["font_form"],
-                            page["compressed"],
-                            page["stream_filter"],
-                            " ".join(page["text"].split()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page", "n_pages", "n_objects",
-                    "xref_form", "font_form", "compressed",
-                    "stream_filter", "text",
-                ],
+    def pages(fpath, payload):
+        m = id_re.search(fpath)
+        if m is None:
+            raise ValueError(f"unexpected fixture path {fpath!r}")
+        doc_id = int(m.group(1))
+        parsed = parse_pdf(bytes(payload))
+        n_pages = len(parsed["pages"])
+        for p, page in enumerate(parsed["pages"]):
+            yield (
+                doc_id, p, n_pages, parsed["n_objects"], parsed["xref_form"],
+                parsed["font_form"], page["compressed"], page["stream_filter"],
+                " ".join(page["text"].split()),
             )
 
-    out = files.mapInPandas(
-        run,
+    out = map_rows(
+        files, pages,
         "doc_id long, page int, n_pages int, n_objects int,"
         " xref_form string, font_form string, compressed boolean,"
         " stream_filter string, text string",
@@ -1785,11 +1704,7 @@ def stage_subtitle_files(sf_dir: str) -> str:
     _STAGED marker; the dir suffix is the fixture VERSION."""
     from mapreducego_spark.sources.subtitlecodec import build_srt, build_vtt
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_suba"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def files():
         import duckdb
 
         docs = duckdb.sql(
@@ -1813,12 +1728,9 @@ def stage_subtitle_files(sf_dir: str) -> str:
                     settings_every=3,
                 )
                 ext = "vtt"
-            path = os.path.join(out, f"doc_{doc_id:07d}.{ext}")
-            with open(path, "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(len(docs)))
-    return out
+            yield f"doc_{doc_id:07d}.{ext}", data
+
+    return stage_files(sf_dir, "suba", files())
 
 
 def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1841,10 +1753,8 @@ def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: files are the parallel unit (sidecar files are
     small and per-media, matching the real corpus layout), one Arrow
     crossing, no shuffle before the presentation sort."""
-    from collections.abc import Iterator as _Iterator
     import re as _re
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.subtitlecodec import parse_subtitles
@@ -1858,38 +1768,20 @@ def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     id_re = _re.compile(r"/(doc_(\d+)\.(?:srt|vtt))$")
 
-    def run(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for fpath, payload in zip(batch["path"], batch["content"]):
-                m = id_re.search(fpath)
-                if m is None:
-                    raise ValueError(f"unexpected fixture path {fpath!r}")
-                doc_id = int(m.group(2))
-                fmt, cues = parse_subtitles(bytes(payload), m.group(1))
-                for c in cues:
-                    rows.append(
-                        (
-                            doc_id,
-                            fmt,
-                            c["idx"],
-                            c["start_ms"],
-                            c["end_ms"],
-                            c["end_ms"] - c["start_ms"],
-                            c["settings"],
-                            c["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "format", "cue_idx", "start_ms",
-                    "end_ms", "dur_ms", "settings", "text",
-                ],
+    def cues(fpath, payload):
+        m = id_re.search(fpath)
+        if m is None:
+            raise ValueError(f"unexpected fixture path {fpath!r}")
+        doc_id = int(m.group(2))
+        fmt, parsed = parse_subtitles(bytes(payload), m.group(1))
+        for c in parsed:
+            yield (
+                doc_id, fmt, c["idx"], c["start_ms"], c["end_ms"],
+                c["end_ms"] - c["start_ms"], c["settings"], c["text"],
             )
 
-    out = files.mapInPandas(
-        run,
+    out = map_rows(
+        files, cues,
         "doc_id long, format string, cue_idx long, start_ms long,"
         " end_ms long, dur_ms long, settings string, text string",
     )

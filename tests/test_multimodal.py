@@ -2569,3 +2569,59 @@ def test_tiff_structural_refusals_tiles_planar_predictor_order():
     # non-uint8 raster refuses at the encoder
     with pytest.raises(ValueError, match="uint8"):
         encode_tiff(g.astype(np.int32), 1)
+
+
+def test_map_rows_one_to_one_fan_out_and_skip(spark):
+    """map_rows contract: fn gets one row's values in column order and
+    yields zero or more tuples — 1:1, 1:n and 'nothing for this row'
+    all through the same adapter, across empty partitions too."""
+    from mapreducego_spark.operators.util import map_rows
+
+    df = spark.range(0, 6, numPartitions=12)
+    assert 0 in df.rdd.glom().map(len).collect()  # empty partitions exist
+
+    def square(i):
+        yield (i, i * i)
+
+    def fan_out(i):
+        for k in range(i):  # i == 0 yields nothing
+            yield (i, k)
+
+    def evens_only(i):
+        if i % 2 == 0:
+            yield (i,)
+
+    one = map_rows(df, square, "id long, sq long")
+    assert sorted(map(tuple, one.collect())) == [(i, i * i) for i in range(6)]
+    many = map_rows(df, fan_out, "id long, k long")
+    assert sorted(map(tuple, many.collect())) == [
+        (i, k) for i in range(6) for k in range(i)
+    ]
+    some = map_rows(df, evens_only, "id long")
+    assert sorted(r.id for r in some.collect()) == [0, 2, 4]
+
+
+def test_map_rows_empty_input_and_schema_column_order(spark):
+    """Output columns are named and ordered by the schema alone (no
+    second spelling in fn), whatever the input's column order; an
+    input with no rows at all yields an empty, correctly typed frame."""
+    from mapreducego_spark.operators.util import map_rows
+
+    src = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
+    )
+
+    def words(doc_id, text):
+        for pos, w in enumerate(text.split()):
+            yield (w, len(w), doc_id, pos)
+
+    schema = "word string, word_len int, doc_id long, token_pos long"
+    out = map_rows(src, words, schema)
+    assert out.columns == ["word", "word_len", "doc_id", "token_pos"]
+    got = [tuple(r) for r in out.orderBy("doc_id", "token_pos").collect()]
+    assert got == [("alpha", 5, 1, 0), ("beta", 4, 1, 1), ("gamma", 5, 2, 0)]
+    empty = map_rows(src.limit(0), words, schema)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<word:string,word_len:int,doc_id:bigint,token_pos:bigint>"
+    )

@@ -31,11 +31,14 @@ def test_plain_orderby_double_executes(spark):
     """Control: a global orderBy above a shuffle-free Python map DOES
     run the map twice (sampling pass + real pass). If this ever
     starts failing, Spark fixed the double execution upstream and
-    sort_once's checkpoint is pure overhead — re-measure it."""
+    sort_once's checkpoint is pure overhead — re-measure it. The
+    check is directional (more than one invocation per partition):
+    how many extra invocations the sampler costs is Spark's business,
+    only that it re-runs the map matters here."""
     acc = spark.sparkContext.accumulator(0)
     df = _counted_source(spark, acc)
     df.orderBy("id").write.format("noop").mode("overwrite").save()
-    assert acc.value == 8, f"expected 2x4 invocations, saw {acc.value}"
+    assert acc.value > 4, f"expected >1x4 invocations, saw {acc.value}"
 
 
 def test_sort_once_single_execution(spark):

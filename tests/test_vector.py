@@ -297,3 +297,30 @@ def test_ivfpq_recall_floor_and_exact_rerank_values(spark):
     assert [tuple(r) for r in vector_ann_ivfpq(spark, sf).collect()] == [
         tuple(r) for r in got_rows
     ]
+
+
+def test_lsh_fixture_dots_clear_the_float_seam():
+    """The dedup_embedding_lsh oracle replays sketch bit p =
+    sign(v . plane_p) in DuckDB as a SUM fold while the engine uses a
+    BLAS matmul; the two agree unless |dot| is within summation-
+    reordering error of zero. Pin that the sf0.01 fixtures stay clear
+    of that seam, so a regenerated fixture that lands on it fails
+    here by name rather than as an opaque oracle hash mismatch."""
+    import pyarrow.parquet as pq
+
+    from mapreducego_spark.functions.vector import (
+        EMB_DIMS,
+        N_PLANES,
+        _plane_matrix,
+    )
+    from tests.conftest import SF_ORACLE
+
+    col = pq.read_table(f"{SF_ORACLE}/embeddings.parquet")["embedding"]
+    mat = np.array(col.to_pylist(), dtype=np.float64)
+    dots = np.abs(mat @ _plane_matrix(EMB_DIMS, N_PLANES))
+    worst = float(dots.min())
+    assert worst > 1e-12, (
+        f"dedup_embedding_lsh sign seam: a sketch dot product is "
+        f"{worst:.3e} from zero, so DuckDB's SUM fold and numpy's matmul "
+        "may disagree on that sketch bit and fail the oracle"
+    )

@@ -10,8 +10,8 @@ CORRECTNESS_r{N}.json contains a row for it, then print:
     never-checked first (registry order), then oldest-stale.
 
 The round driver verifies the FIRST 50 registry entries in insertion
-order, so the proposal is what `_R{N}_WINDOW` in registry.py should
-contain (minus the round's own new/changed entries, which take
+order, so the proposal is what `_VERIFY_FIRST` in registry.py should
+start with (after the round's own new/changed entries, which take
 priority and must be added by hand).
 
 Usage: python tools/staleness.py [window_size]
